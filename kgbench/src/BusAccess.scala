@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The listener bus's drain is package-private to Spark; the traced run
+  * needs it so a layer's counters are complete before they are read.
+  */
+object BusAccess {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
